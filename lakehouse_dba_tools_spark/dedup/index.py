@@ -18,11 +18,12 @@ as operators/upsert.py):
 - ``shash/``  (doc_id, shash array<bigint>) — distinct xxhash64'd
   shingles per doc, the compact verify-side payload (8 B/shingle;
   document TEXT never enters the index).
-- ``_lsh_meta.json``  {k, num_perm, bands, seed, shash_dir} —
-  signatures only collide within one permutation family, so
-  query/append take their parameters FROM the stored meta (callers
-  cannot pass divergent ones) and a missing meta file fails loudly
-  instead of finding nothing. ``shash_dir`` names the shash VERSION
+- ``bands/<version>/_lsh_meta.json``  {k, num_perm, bands, seed,
+  id_col, text_col, shash_dir} — the one meta file, inside each bands
+  version directory. Signatures only collide within one permutation
+  family, so query/append take their parameters FROM the stored meta
+  (callers cannot pass divergent ones) and a missing meta file fails
+  loudly instead of finding nothing. ``shash_dir`` names the shash VERSION
   this bands snapshot pairs with: the index spans two tables, and two
   independent pointer flips would leave a window (crash mid-build, or
   a reader racing a full rebuild over a different corpus) where new
@@ -31,8 +32,7 @@ as operators/upsert.py):
   bands version meta makes the bands flip the single atomic commit
   for the whole index (the same pattern as the IVF cid manifest and
   the champions _termstats); readers resolve bands ONCE and take the
-  shash version that snapshot names. Pre-round-10 indexes lack the
-  key and fall back to the live shash pointer.
+  shash version that snapshot names.
 
 Scale notes: query cost is |batch| signatures + one join against the
 band table (shuffle carries (band_key, id) pairs only) + a verify join
@@ -63,9 +63,7 @@ adds as first-class (dedup at continuous-ingest scale).
 
 from __future__ import annotations
 
-import json
 import os
-import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -218,10 +216,6 @@ def build_lsh_index(
         write_version_meta(bands_target, META_NAME, meta)
         publish(sh_live, sh_target)
         publish(bands_live, bands_target)
-        # root-level copy is informational only (humans / legacy
-        # tooling); every reader goes through snapshot_meta
-        with open(os.path.join(path, META_NAME), "w") as fh:
-            json.dump(meta, fh)
     pinned.unpersist()
     _refresh(docs.sparkSession, path)
     return meta
@@ -230,42 +224,7 @@ def build_lsh_index(
 def read_lsh_meta(path: str) -> dict:
     """Parameters of the CURRENT published snapshot (resolved through
     the bands pointer — atomically coupled with the band tables)."""
-    return snapshot_meta(os.path.join(path, "bands"), META_NAME, path)[1]
-
-
-def _shash_dir(path: str, m: dict) -> str:
-    """The shash version directory PAIRED with a bands snapshot's meta
-    (the single-flip coupling — see the module docstring). Falls back
-    to the live shash pointer for pre-round-10 indexes whose meta
-    predates the ``shash_dir`` key, and to a FLAT live directory when
-    the named version is gone because an external tool flattened the
-    layout (the legacy-migration scenario heal() recovers). A named
-    version reclaimed while the live path is still versioned (reader
-    ≥2 compacts stale, or post-vacuum) stays pointed-at and fails
-    loudly on first file access — the standard retention contract,
-    never a silent re-pair with a different build's table."""
-    live = os.path.join(path, "shash")
-    if "shash_dir" in m:
-        named = os.path.join(path, m["shash_dir"])
-        if not os.path.isdir(named) and os.path.isdir(live) and not os.path.islink(live):
-            # Loud, not silent: if an external actor both reclaimed
-            # the named version AND placed a DIFFERENT build's table
-            # at the flat path, the single-flip pairing guarantee is
-            # void — the warning makes that migration assumption
-            # auditable instead of invisible.
-            warnings.warn(
-                f"LSH index at {path!r}: paired shash version "
-                f"{m['shash_dir']!r} is gone and a flat live directory "
-                f"exists — assuming an external layout migration and "
-                f"reading the flat table. If anything other than a "
-                f"flatten-in-place produced this state, bands and "
-                f"shash may come from different builds.",
-                UserWarning,
-                stacklevel=3,
-            )
-            return live
-        return named
-    return current_version_dir(live)
+    return snapshot_meta(os.path.join(path, "bands"), META_NAME)[1]
 
 
 def append_to_lsh_index(docs: DataFrame, path: str) -> None:
@@ -333,7 +292,9 @@ def _append_rows(
             .write.mode("append")
             .partitionBy("band_idx")
             .parquet(current_version_dir(os.path.join(path, "bands"))),
-            lambda: sh.write.mode("append").parquet(_shash_dir(path, cur)),
+            lambda: sh.write.mode("append").parquet(
+                os.path.join(path, cur["shash_dir"])
+            ),
         )
     _refresh(spark, path)
 
@@ -363,6 +324,13 @@ def ingest_batch(
     within-batch pairs the original epoch never produced. With it, a
     replayed epoch reproduces the original cross-batch-only result.
 
+    Failure contract: the pair collect and the append run concurrently,
+    so when this call raises, the batch may already be appended (in
+    whole or in part). The safe recovery is to retry the SAME batch.
+    The retry is idempotent: its own ids are excluded from the pairs
+    (``exclude_ids``, above), and the rows it appends a second time are
+    duplicates that queries tolerate and ``compact_lsh_index`` folds.
+
     Forget composition (the GDPR × replay corner): a batch doc whose
     id is in the suppression ledger — a redelivery of an epoch whose
     docs were forgotten AFTER the original delivery — is dropped
@@ -374,7 +342,7 @@ def ingest_batch(
     report reflects the batch as of signing; callers that persist
     pair reports re-scrub them on their own forget cadence like any
     other derived table (`operators/forget.py cascade_delete`)."""
-    bands_dir, m = snapshot_meta(os.path.join(path, "bands"), META_NAME, path)
+    bands_dir, m = snapshot_meta(os.path.join(path, "bands"), META_NAME)
     docs = filter_ledgered(docs, path, m["id_col"])
     bk, sh, pinned = _index_rows(
         docs, m["text_col"], m["id_col"], m["k"], m["num_perm"], m["bands"], m["seed"]
@@ -472,9 +440,9 @@ def compact_lsh_index(spark: SparkSession, path: str) -> dict:
         bands_target = init_versioned(bands_live)
 
         def _compact_shash() -> int:
-            sh_df = spark.read.parquet(_shash_dir(path, m)).dropDuplicates(
-                ["doc_id"]
-            )
+            sh_df = spark.read.parquet(
+                os.path.join(path, m["shash_dir"])
+            ).dropDuplicates(["doc_id"])
             sh_df.coalesce(1).write.mode("overwrite").parquet(sh_target)
             return spark.read.parquet(sh_target).count()
 
@@ -586,7 +554,7 @@ def forget_from_lsh_index(
         bands_target = init_versioned(bands_live)
 
         def _forget_shash() -> tuple[int, int]:
-            sh_src = spark.read.parquet(_shash_dir(path, m))
+            sh_src = spark.read.parquet(os.path.join(path, m["shash_dir"]))
             sh_kept = sh_src.join(
                 ids, sh_src[m["id_col"]] == ids[id_col_alias], "left_anti"
             )
@@ -659,7 +627,7 @@ def query_lsh_index(
     sign pass recomputes per consumer instead of leaking one
     unreleasable cache entry per call (loop-style callers should use
     ``ingest_batch``, which pins AND cleans per batch)."""
-    bands_dir, m = snapshot_meta(os.path.join(path, "bands"), META_NAME, path)
+    bands_dir, m = snapshot_meta(os.path.join(path, "bands"), META_NAME)
     bk, batch_sh, pinned = _index_rows(
         batch, m["text_col"], m["id_col"], m["k"], m["num_perm"], m["bands"], m["seed"]
     )
@@ -766,9 +734,8 @@ def _query_signed(
             "left_anti",
         )
     # the shash version PAIRED with this bands snapshot (named by its
-    # meta — one pointer flip covers both tables; legacy metas fall
-    # back to the live pointer)
-    idx_sh = spark.read.parquet(_shash_dir(path, m))
+    # meta — one pointer flip covers both tables)
+    idx_sh = spark.read.parquet(os.path.join(path, m["shash_dir"]))
     # Duplicate-tolerant: an at-least-once append replay leaves
     # duplicate shash rows until compact_lsh_index runs; the verify
     # join would then emit the SAME pair once per copy. jaccard is a
@@ -812,7 +779,7 @@ def rebuild_lsh_index(
         heal(sh_live)
         heal(bands_live)
         stored = (
-            spark.read.parquet(_shash_dir(path, m))
+            spark.read.parquet(os.path.join(path, m["shash_dir"]))
             .dropDuplicates([id_col])
         )
         signed = stored.withColumn(
@@ -837,8 +804,5 @@ def rebuild_lsh_index(
         write_version_meta(bands_target, META_NAME, meta)
         publish(sh_live, sh_target)
         publish(bands_live, bands_target)
-        # root copy is informational only; readers use snapshot_meta
-        with open(os.path.join(path, META_NAME), "w") as fh:
-            json.dump(meta, fh)
     _refresh(spark, path)
     return meta

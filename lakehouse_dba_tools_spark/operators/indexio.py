@@ -40,6 +40,10 @@ Appends write *through* the symlink into the current version
 directory: parquet appends are additive (new files only), so readers
 racing an append see a prefix of it — the standard parquet-append
 visibility semantics, unchanged by the versioning.
+
+This is the only on-disk layout. Each table's parameter sidecar rides
+inside its version directory (``write_version_meta``), never at the
+index root, and ``heal`` refuses a plain directory at a live path.
 """
 
 from __future__ import annotations
@@ -167,34 +171,30 @@ def heal(live: str, retain: int = 1) -> None:
     the newest ``retain`` superseded published snapshots for in-flight
     readers. Call under ``writer_lock`` before mutating. A reader
     never needs this — the pointer always resolves to a complete
-    version."""
+    version.
+
+    A plain directory at ``live`` is refused with ``RuntimeError``
+    before anything is written: every index table is a pointer to a
+    version directory, and ``publish`` could not replace a directory
+    with a symlink anyway — failing here saves the full version a
+    writer would otherwise write first."""
+    if os.path.isdir(live) and not os.path.islink(live):
+        raise RuntimeError(
+            f"index table at {live!r} is a plain directory, not a pointer "
+            f"to a version directory (operators/indexio.py layout); "
+            f"rebuild the index at a fresh path"
+        )
     tmp = live + "._ptr"
     if os.path.islink(tmp) or os.path.exists(tmp):
         os.remove(tmp)
-    if os.path.isdir(live) and not os.path.islink(live):
-        # Legacy flat layout (a table written before versioning, or by
-        # an external tool): publish() cannot os.replace a symlink over
-        # a non-empty real directory, so migrate it under the writer
-        # lock — rename the directory to <live>.v0 and point a fresh
-        # symlink at it. Builds/compactions over legacy indexes then
-        # proceed normally (the next version is .v1).
-        target = live + ".v0"
-        # a same-named .v0 here was never published (no pointer exists
-        # to it) — crash debris, safe to clear
-        shutil.rmtree(target, ignore_errors=True)
-        os.rename(live, target)
-        os.symlink(os.path.basename(target), tmp)
-        os.replace(tmp, live)
-    elif not os.path.islink(live) and not os.path.exists(live):
-        # Dangling-migration recovery: a crash BETWEEN the rename above
-        # and its pointer publish leaves the table's only copy as an
-        # unpointered version dir with no live path at all. Without
-        # this re-point, _reclaim (cur_n=None) would treat every
-        # version dir as never-published debris and delete the legacy
-        # table permanently. Re-point at the NEWEST version sibling —
-        # for the migration crash that is the renamed .v0 itself; for a
-        # crashed-before-first-publish fresh build it may resurrect a
-        # possibly-partial .v0, which the imminent build overwrites
+    if not os.path.islink(live) and not os.path.exists(live):
+        # Dangling-pointer recovery: version directories but no live
+        # path (a build that crashed before its first publish, or a
+        # pointer lost outside the writer protocol). Without this
+        # re-point, _reclaim (cur_n=None) would treat every version dir
+        # as never-published debris and could delete the table's only
+        # copy. Re-point at the NEWEST version sibling — it may be a
+        # partial .v0, which the imminent build supersedes
         # (init_versioned) — resurrecting is recoverable, deleting the
         # only copy is not.
         newest = _newest_version(live)
@@ -426,7 +426,7 @@ def _reclaim(live: str, retain: int) -> None:
     published snapshots. Versions numbered ABOVE the current pointer
     were never published (publishing is monotonic) — always debris.
 
-    Safety interlock (the dangling-migration hazard): when ``live`` is
+    Safety interlock (the dangling-pointer hazard): when ``live`` is
     not a symlink, there is no pointer to distinguish debris from a
     table whose publish crashed mid-flight — deleting on a guess could
     destroy the only copy, so this refuses to delete anything; heal()
@@ -599,30 +599,16 @@ def write_version_meta(version_dir: str, name: str, meta: dict) -> None:
     os.replace(tmp, os.path.join(version_dir, name))
 
 
-def snapshot_meta(live: str, name: str, root: str) -> tuple[str, dict]:
+def snapshot_meta(live: str, name: str) -> tuple[str, dict]:
     """Resolve the live pointer ONCE and return ``(version_dir, meta)``
     as a coupled pair — the reader-side half of the atomic-parameters
     contract. Callers MUST scan the returned ``version_dir`` (not
     re-resolve ``live``), so the parameters they plan with always
-    describe the exact snapshot they read. Falls back to the root-level
-    sidecar for indexes written before meta rode the version
-    directories (those never rebuilt, so the root copy is current)."""
+    describe the exact snapshot they read. The sidecar lives only in
+    the version directory; a missing one raises FileNotFoundError."""
     vd = current_version_dir(live)
-    p = os.path.join(vd, name)
-    if not os.path.exists(p):
-        p = os.path.join(root, name)
-    with open(p) as fh:
+    with open(os.path.join(vd, name)) as fh:
         return vd, json.load(fh)
-
-
-def carry_version_meta(src_dir: str, dst_dir: str, name: str) -> None:
-    """Copy the parameter sidecar into a compaction's new version
-    directory before publish (parameters are unchanged by a compact,
-    but every published version must be self-describing). No-op for a
-    legacy version that predates in-version meta."""
-    src = os.path.join(src_dir, name)
-    if os.path.exists(src):
-        shutil.copyfile(src, os.path.join(dst_dir, name))
 
 
 def describe_index(spark, path: str, tables: tuple[str, ...]) -> list[dict]:

@@ -241,6 +241,10 @@ def bm25_score_scalar(
 #   index, so a query-term IN-filter reads only matching row groups
 #   (the plain-parquet analog of partitioning by term, without a
 #   directory per term).
+# - postings/<ver>/_bm25_postings_meta.json  {id_col, text_col,
+#   doclens_dir} — the index's parameters, and the doclens VERSION
+#   this postings snapshot pairs with (one pointer flip commits both
+#   tables; see _postings_snapshot).
 # - doclens/   (doc_id, dl) — corpus stats (N, avgdl) are recomputed
 #   from this tiny table at query time, so APPENDS KEEP BM25 HONEST:
 #   stored global stats would go stale with every batch.
@@ -261,8 +265,6 @@ def bm25_score_scalar(
 #   underscore prefix hides it from the champions parquet scan — so
 #   ONE pointer flip publishes tier + df + stats together and a query
 #   racing a compact can never pair a tier with another snapshot's df.
-#   (Indexes built before round 10 published termstats as a separate
-#   live table; readers fall back to it.)
 # - blocked/ (bucket, term, doc_id, tf, dl) — the BLOCK-MAX tier
 #   (Ding & Suel's Block-Max WAND, re-expressed for a batch engine):
 #   the full postings partitioned into ``wand_buckets`` doc_id-hash
@@ -280,7 +282,6 @@ def bm25_score_scalar(
 #   plan reads; df(term) = Σ_bucket n_docs (postings are deduped at
 #   refresh). Rides inside the blocked version dir: one flip publishes
 #   postings + maxima + stats.
-# - _bm25_meta.json  {id_col, text_col}
 # - champions/<ver>/_bm25_champ_meta.json  {champion_n, n_docs, avgdl,
 #   k1, b, impact_flatness} — the stats snapshot the tier was ordered
 #   under, riding inside the champions version dir (atomic tier+stats
@@ -305,57 +306,28 @@ def bm25_score_scalar(
 # replay-tolerant, NOT update-tolerant: re-appending a doc_id whose
 # text CHANGED is caller error (dedup keeps an arbitrary variant).
 
-BM25_META = "_bm25_meta.json"
 POSTINGS_META = "_bm25_postings_meta.json"
 CHAMP_META = "_bm25_champ_meta.json"
 WAND_META = "_bm25_wand_meta.json"
 
 
-def _postings_snapshot(path: str) -> tuple[str, str]:
-    """(postings version dir, doclens dir) resolved as ONE couple: the
-    postings version meta NAMES the doclens version it was written
-    with, so the postings pointer flip is the single atomic commit for
-    the two-table pair (same round-10 pattern as the LSH bands meta,
-    the IVF cid manifest, and the champions _termstats — two
-    independent flips would let a crash or a reader racing a full
+def _postings_snapshot(path: str) -> tuple[str, str, dict]:
+    """(postings version dir, doclens dir, postings meta) resolved as
+    ONE snapshot: the postings version meta NAMES the doclens version
+    it was written with, so the postings pointer flip is the single
+    atomic commit for the two-table pair (the same pattern as the LSH
+    bands meta, the IVF cid manifest, and the champions _termstats —
+    two independent flips would let a crash or a reader racing a full
     rebuild pair postings with a different build's doclens: stats and
-    scores silently wrong). Pre-round-10 indexes have no postings
-    version meta and fall back to the two live pointers; a named
-    doclens version already reclaimed fails loudly on first file
-    access unless the layout was externally flattened (legacy
-    migration), in which case the flat live directory IS the table."""
-    import json
+    scores silently wrong). The meta also carries the index's
+    ``id_col``/``text_col``. A named doclens version already reclaimed
+    fails loudly on first file access."""
     import os
 
-    from lakehouse_dba_tools_spark.operators.indexio import current_version_dir
+    from lakehouse_dba_tools_spark.operators.indexio import snapshot_meta
 
-    import warnings
-
-    postings_dir = current_version_dir(os.path.join(path, "postings"))
-    live = os.path.join(path, "doclens")
-    pm_path = os.path.join(postings_dir, POSTINGS_META)
-    if os.path.exists(pm_path):
-        with open(pm_path) as fh:
-            named_base = json.load(fh)["doclens_dir"]
-        named = os.path.join(path, named_base)
-        if not os.path.isdir(named) and os.path.isdir(live) and not os.path.islink(live):
-            # Loud, not silent (same contract as dedup._shash_dir): the
-            # flat fallback exists for external flatten-in-place
-            # migrations only; any other path to this state could pair
-            # postings with a different build's doclens.
-            warnings.warn(
-                f"BM25 index at {path!r}: paired doclens version "
-                f"{named_base!r} is gone and a flat live directory "
-                f"exists — assuming an external layout migration and "
-                f"reading the flat table. If anything other than a "
-                f"flatten-in-place produced this state, postings and "
-                f"doclens may come from different builds.",
-                UserWarning,
-                stacklevel=3,
-            )
-            return postings_dir, live
-        return postings_dir, named
-    return postings_dir, current_version_dir(live)
+    p_dir, pm = snapshot_meta(os.path.join(path, "postings"), POSTINGS_META)
+    return p_dir, os.path.join(path, pm["doclens_dir"]), pm
 
 
 def build_postings_index(
@@ -377,16 +349,11 @@ def build_postings_index(
     each costs one extra postings shuffle per build/compact; an index
     built without them keeps exactly the pre-tier cost profile, and
     compact refreshes only the tiers that exist."""
-    import json
-    import os
-
     from lakehouse_dba_tools_spark.operators.indexio import writer_lock
 
     spark = docs.sparkSession
     with writer_lock(path):
         _write_postings(docs, path, text_col, id_col, fresh=True)
-        with open(os.path.join(path, BM25_META), "w") as fh:
-            json.dump({"id_col": id_col, "text_col": text_col}, fh)
         # the two tiers derive from the SAME published postings pair
         # and write disjoint live dirs — independent refresh jobs,
         # overlapped from driver threads (indexio.overlap_jobs)
@@ -414,20 +381,13 @@ def build_postings_index(
 
 
 def append_to_postings_index(docs: DataFrame, path: str) -> None:
-    import json
-    import os
+    from lakehouse_dba_tools_spark.operators.indexio import writer_lock
 
-    from lakehouse_dba_tools_spark.operators.indexio import (
-        filter_ledgered,
-        writer_lock,
-    )
-
-    with open(os.path.join(path, BM25_META)) as fh:
-        m = json.load(fh)
     # The lock keeps this append out of any concurrent compaction's
     # snapshot→publish window (it would otherwise be silently dropped
     # with the superseded version directory).
     with writer_lock(path):
+        m = _postings_snapshot(path)[2]
         # replay/backfill-resurrection guard lives in _write_postings
         # (one place for append AND fresh-build paths)
         _write_postings(docs, path, m["text_col"], m["id_col"], fresh=False)
@@ -465,7 +425,7 @@ def _heal_stale_tiers(spark, path: str, id_col: str) -> None:
             _, tm = snap(path)
         except FileNotFoundError:
             continue
-        if tm.get("postings_dir") is not None and tm["postings_dir"] != cur:
+        if tm["postings_dir"] != cur:
             refresh(tm)
 
 
@@ -530,7 +490,7 @@ def _write_postings(
             # into the version the postings snapshot NAMES) — readers
             # racing one see a prefix, the standard parquet-append
             # visibility; the two appends overlap like the fresh writes
-            p_dir, d_dir = _postings_snapshot(path)
+            p_dir, d_dir, _ = _postings_snapshot(path)
             overlap_jobs(
                 lambda: postings.write.mode("append").parquet(p_dir),
                 lambda: doclens.write.mode("append").parquet(d_dir),
@@ -592,7 +552,7 @@ def _refresh_champions(
         write_version_meta,
     )
 
-    p_dir, d_dir = _postings_snapshot(path)
+    p_dir, d_dir, _ = _postings_snapshot(path)
     postings = spark.read.parquet(p_dir)
     doclens = spark.read.parquet(d_dir)
     if not assume_deduped:
@@ -706,7 +666,7 @@ def _refresh_wand(
         write_version_meta,
     )
 
-    p_dir, d_dir = _postings_snapshot(path)
+    p_dir, d_dir, _ = _postings_snapshot(path)
     postings = spark.read.parquet(p_dir)
     doclens = spark.read.parquet(d_dir)
     if not assume_deduped:
@@ -783,7 +743,6 @@ def compact_postings_index(spark, path: str) -> dict:
     version behind one atomic pointer flip under the index writer lock
     (appends queue behind it). Returns {table: files_before/
     files_after/rows}."""
-    import json
     import os
 
     from lakehouse_dba_tools_spark.operators.indexio import (
@@ -795,16 +754,14 @@ def compact_postings_index(spark, path: str) -> dict:
         writer_lock,
     )
 
-    with open(os.path.join(path, BM25_META)) as fh:
-        bm = json.load(fh)
-    id_col = bm["id_col"]
     out: dict = {}
     with writer_lock(path):
         p_live = os.path.join(path, "postings")
         d_live = os.path.join(path, "doclens")
         heal(p_live)
         heal(d_live)
-        src_p, src_d = _postings_snapshot(path)
+        src_p, src_d, pm = _postings_snapshot(path)
+        id_col = pm["id_col"]
         # The compacted postings' version meta NAMES the compacted
         # doclens version — naming needs only the target path, so each
         # table's dedup-rewrite+count is an independent unit,
@@ -841,8 +798,7 @@ def compact_postings_index(spark, path: str) -> dict:
         d_rows, p_rows = overlap_jobs(_compact_doclens, _compact_postings)
         write_version_meta(
             p_target, POSTINGS_META,
-            {"id_col": id_col, "text_col": bm["text_col"],
-             "doclens_dir": os.path.basename(d_target)},
+            {**pm, "doclens_dir": os.path.basename(d_target)},
         )
         publish(d_live, d_target)
         publish(p_live, p_target)
@@ -955,7 +911,6 @@ def forget_from_postings_index(
     un-compacted appends since its last build/compact (e.g. the
     build-then-forget audit flows); each refresh then skips its full
     postings+doclens dedup shuffle."""
-    import json
     import os
 
     from lakehouse_dba_tools_spark.operators.indexio import (
@@ -970,16 +925,14 @@ def forget_from_postings_index(
         writer_lock,
     )
 
-    with open(os.path.join(path, BM25_META)) as fh:
-        bm = json.load(fh)
-    id_col = bm["id_col"]
     out: dict = {}
     with writer_lock(path):
         p_live = os.path.join(path, "postings")
         d_live = os.path.join(path, "doclens")
         heal(p_live)
         heal(d_live)
-        src_p, src_d = _postings_snapshot(path)
+        src_p, src_d, pm = _postings_snapshot(path)
+        id_col = pm["id_col"]
         ids = F.broadcast(
             forget_ids.select(
                 F.col(forget_ids.columns[0]).alias("_forget_id")
@@ -1030,8 +983,7 @@ def forget_from_postings_index(
         )
         write_version_meta(
             p_target, POSTINGS_META,
-            {"id_col": id_col, "text_col": bm["text_col"],
-             "doclens_dir": os.path.basename(d_target)},
+            {**pm, "doclens_dir": os.path.basename(d_target)},
         )
         # ledger BEFORE the pointer flips (indexio ordering contract):
         # a published forget without a ledger entry would let a
@@ -1100,7 +1052,7 @@ def _champ_snapshot(path: str) -> tuple[str, dict]:
 
     from lakehouse_dba_tools_spark.operators.indexio import snapshot_meta
 
-    return snapshot_meta(os.path.join(path, "champions"), CHAMP_META, path)
+    return snapshot_meta(os.path.join(path, "champions"), CHAMP_META)
 
 
 def _wand_snapshot(path: str) -> tuple[str, dict]:
@@ -1109,7 +1061,7 @@ def _wand_snapshot(path: str) -> tuple[str, dict]:
 
     from lakehouse_dba_tools_spark.operators.indexio import snapshot_meta
 
-    return snapshot_meta(os.path.join(path, "blocked"), WAND_META, path)
+    return snapshot_meta(os.path.join(path, "blocked"), WAND_META)
 
 
 def _check_tier_stamp(path: str, tm: dict, tier: str) -> None:
@@ -1123,9 +1075,7 @@ def _check_tier_stamp(path: str, tm: dict, tier: str) -> None:
     stamped with the postings version it was derived from
     (`_refresh_champions`/`_refresh_wand`); a mismatch means exactly
     that crash happened, and any locked writer verb (compact, forget,
-    append — all end by refreshing stale tiers) repairs it. Tiers
-    written before stamping (no ``postings_dir`` key) predate the
-    forget verb entirely — nothing to verify, documented legacy pass.
+    append — all end by refreshing stale tiers) repairs it.
 
     NOT a staleness check for APPENDS: appends write through the
     pointer into the SAME postings version (no new version dir), so
@@ -1133,9 +1083,7 @@ def _check_tier_stamp(path: str, tm: dict, tier: str) -> None:
     documented compact-cadence contract."""
     import os
 
-    stamp = tm.get("postings_dir")
-    if stamp is None:
-        return
+    stamp = tm["postings_dir"]
     cur = os.path.basename(_postings_snapshot(path)[0])
     if stamp != cur:
         raise RuntimeError(
@@ -1228,12 +1176,7 @@ def query_postings_index(
     For champions/wand, ``k1``/``b`` default to the STORED tier
     parameters; passing explicit values that differ raises (the tier's
     ordering/bounds were computed under the stored ones)."""
-    import json
-    import os
-
-    with open(os.path.join(path, BM25_META)) as fh:
-        m = json.load(fh)
-
+    p_dir, d_dir, m = _postings_snapshot(path)
     if mode == "champions":
         return _query_champions(spark, path, query, k, k1, b, m["id_col"])
     if mode == "wand":
@@ -1245,12 +1188,11 @@ def query_postings_index(
     k1 = 1.2 if k1 is None else k1
     b = 0.75 if b is None else b
 
-    # Bind both scans to the RESOLVED version pair (the postings meta
-    # names its doclens version — one flip covers both tables): the
+    # Both scans bind to the version pair resolved above (the postings
+    # meta names its doclens version — one flip covers both tables): the
     # snapshot stays complete across one subsequent compact (indexio
     # retention), so a query planned pre-compact evaluates correctly
     # post-compact and can never pair tables from different builds.
-    p_dir, d_dir = _postings_snapshot(path)
     row = (
         spark.read.parquet(d_dir)
         .dropDuplicates([m["id_col"]])
@@ -1281,8 +1223,6 @@ def _query_champions(
     import os
     import warnings
 
-    from lakehouse_dba_tools_spark.operators.indexio import current_version_dir
-
     try:
         champ_dir, cm = _champ_snapshot(path)
     except FileNotFoundError as e:
@@ -1296,8 +1236,8 @@ def _query_champions(
     terms = sorted(set(_py_tokens(query)))
     if not terms:
         raise ValueError("query produced no tokens")
-    flatness = cm.get("impact_flatness")
-    if len(terms) > 1 and flatness is not None and flatness > 0.5:
+    flatness = cm["impact_flatness"]
+    if len(terms) > 1 and flatness > 0.5:
         warnings.warn(
             f"champions tier at {path!r} has near-flat impacts "
             f"(impact_flatness={flatness}: that fraction of truncated "
@@ -1315,13 +1255,9 @@ def _query_champions(
     # of the term-sorted stats table riding in the SAME published
     # version dir as the tier (one pointer flip covers tier + df +
     # stats, so a query racing a compact scores one snapshot, like the
-    # exact path). Pre-round-10 indexes published termstats as its own
-    # live table — fall back to it (those metas also lack flatness).
-    ts_path = os.path.join(champ_dir, "_termstats")
-    if not os.path.isdir(ts_path):
-        ts_path = current_version_dir(os.path.join(path, "termstats"))
+    # exact path).
     df_t = (
-        spark.read.parquet(ts_path)
+        spark.read.parquet(os.path.join(champ_dir, "_termstats"))
         .filter(F.col("term").isin(terms))
         .select("term", "df")
     )
@@ -1404,15 +1340,13 @@ def _wand_plan(
     true k-th score. The float-margin guard (1e-9) keeps a
     bound-achieving doc on a boundary bucket safe from
     summation-order jitter in θ or ub."""
-    import json
     import math
     import os
 
     blocked_dir, wm = _wand_snapshot(path)
     _check_tier_stamp(path, wm, "wand")
     k1, b = _tier_params(wm, k1, b, "wand")
-    with open(os.path.join(path, BM25_META)) as fh:
-        id_col = json.load(fh)["id_col"]
+    id_col = _postings_snapshot(path)[2]["id_col"]
     terms = sorted(set(_py_tokens(query)))
     if not terms:
         raise ValueError("query produced no tokens")

@@ -14,10 +14,11 @@ On-disk layout under ``path``:
   nprobe a PARTITION-PRUNED scan: a query batch probing p of C lists
   reads p/C of the index bytes (`query_ivf_index` pushes the probed
   cid set into the parquet read).
-- ``_ivf_meta.json``  {n_centroids, seed, id_col, vec_col, centroids}
-  — the trained quantizer itself rides in the sidecar (C × dim
+- ``lists/<version>/_ivf_meta.json``  {n_centroids, seed, id_col,
+  vec_col, centroids, cids} — the one meta file, inside each lists
+  version directory. The trained quantizer itself rides in it (C × dim
   doubles: KBs, driver-sized by construction since training already
-  samples to the driver).
+  samples to the driver), with the manifest of non-empty lists.
 
 Append semantics match FAISS/production IVF: centroids stay FIXED
 after build (assignments are a pure function of the stored quantizer,
@@ -43,7 +44,6 @@ first-class (similarity search at continuous-ingest scale).
 
 from __future__ import annotations
 
-import json
 import os
 
 import numpy as np
@@ -153,9 +153,6 @@ def build_ivf_index(
         meta = {**meta, "cids": _list_cids(target)}
         write_version_meta(target, META_NAME, meta)
         publish(live, target)
-        # root copy is informational only; readers use snapshot_meta
-        with open(os.path.join(path, META_NAME), "w") as fh:
-            json.dump(meta, fh)
     corpus.sparkSession.catalog.refreshByPath(live)
     return meta
 
@@ -163,7 +160,7 @@ def build_ivf_index(
 def read_ivf_meta(path: str) -> dict:
     """Quantizer + params of the CURRENT published snapshot (resolved
     through the lists pointer — atomically coupled with the lists)."""
-    return snapshot_meta(os.path.join(path, "lists"), META_NAME, path)[1]
+    return snapshot_meta(os.path.join(path, "lists"), META_NAME)[1]
 
 
 def append_to_ivf_index(vectors: DataFrame, path: str) -> None:
@@ -348,7 +345,7 @@ def query_ivf_index(
     # below always match the exact lists tree being scanned — a rebuild
     # racing this query flips both or neither. Retention keeps this
     # snapshot complete across one subsequent compact/rebuild.
-    lists_dir, m = snapshot_meta(os.path.join(path, "lists"), META_NAME, path)
+    lists_dir, m = snapshot_meta(os.path.join(path, "lists"), META_NAME)
     cents = np.asarray(m["centroids"])
     assignN = nearest_centroids_udf(cents, nprobe)
     q = queries.select(
@@ -360,20 +357,11 @@ def query_ivf_index(
     # The cid MANIFEST rides in the version meta (refreshed by every
     # locked writer), so the reader does zero filesystem listing/stat
     # calls at any nlist; empty lists (a centroid that owns no vectors
-    # yet) are simply absent from it. isdir fallback for legacy indexes
-    # whose meta predates the manifest.
-    present = m.get("cids")
-    if present is not None:
-        ps = set(present)
-        probe_dirs = [
-            os.path.join(lists_dir, f"cid={c}") for c in probed if c in ps
-        ]
-    else:
-        probe_dirs = [
-            d
-            for d in (os.path.join(lists_dir, f"cid={c}") for c in probed)
-            if os.path.isdir(d)
-        ]
+    # yet) are simply absent from it.
+    present = set(m["cids"])
+    probe_dirs = [
+        os.path.join(lists_dir, f"cid={c}") for c in probed if c in present
+    ]
     if not probe_dirs:
         # every probed list is empty — correctness fallback, never the
         # hot path (a trained quantizer's probed lists hold vectors)
@@ -416,7 +404,7 @@ def ivf_drift_report(spark: SparkSession, path: str) -> DataFrame:
 
     # snapshot resolve: centroids always describe the exact lists tree
     # being scanned (co-published behind one pointer flip)
-    lists_dir, m = snapshot_meta(os.path.join(path, "lists"), META_NAME, path)
+    lists_dir, m = snapshot_meta(os.path.join(path, "lists"), META_NAME)
     cents = []
     for cid, c in enumerate(m["centroids"]):
         norm = math.sqrt(sum(x * x for x in c)) or 1.0
@@ -492,9 +480,6 @@ def rebuild_ivf_index(
         # versa); it sees one complete snapshot or the other
         write_version_meta(target, META_NAME, meta)
         publish(live, target)
-        # root copy is informational only; readers use snapshot_meta
-        with open(os.path.join(path, META_NAME), "w") as fh:
-            json.dump(meta, fh)
     spark.catalog.refreshByPath(live)
     spark.catalog.refreshByPath(current_version_dir(live))
     return meta

@@ -33,7 +33,15 @@ def replay_in_batches(
 ) -> None:
     """Seed from the first ``id // batch_size`` slice, then replay the
     remaining slices as deterministic micro-batches through ``sink``.
-    The staging/checkpoint dirs are temp-scoped and removed."""
+    The staging/checkpoint dirs are temp-scoped and removed. Every row
+    needs an id: a null ``id_col`` raises ``ValueError``.
+
+    ``seed_fn`` runs on an ``overlap_jobs`` worker thread, concurrently
+    with the write that stages the remaining slices. Its Spark jobs do
+    not inherit the caller thread's job group, job description or
+    scheduler pool, and it must not depend on side effects that the
+    staging write's scan of ``df`` could observe (the two run in either
+    order)."""
     stage = tempfile.mkdtemp(prefix="replay_stage_")
     ckpt = tempfile.mkdtemp(prefix="replay_ckpt_")
     try:
@@ -44,8 +52,18 @@ def replay_in_batches(
         # min — no shuffle); the remaining slice ids are read off the
         # staged partition directories below, which the partitioned
         # write materializes anyway. The previous distinct().collect()
-        # paid a full dedup shuffle for the same information.
-        first = batched.agg(F.min("_b")).collect()[0][0]
+        # paid a full dedup shuffle for the same information. The same
+        # aggregate counts null ids, which would otherwise stage under
+        # _b=__HIVE_DEFAULT_PARTITION__ and fail the int() parse below.
+        first, nulls = batched.agg(
+            F.min("_b"), F.count(F.lit(1)) - F.count("_b")
+        ).collect()[0]
+        if nulls:
+            raise ValueError(
+                f"replay_in_batches: id_col {id_col!r} contains nulls "
+                f"({nulls} rows); every row needs an id to be assigned "
+                f"a batch"
+            )
         if first is None:
             raise ValueError("replay_in_batches: empty input DataFrame")
         # Seeding (user callback — e.g. an index build) and the staging

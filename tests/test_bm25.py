@@ -256,7 +256,7 @@ def test_postings_meta_names_its_doclens_version(spark, tmp_path):
     )
     path = str(tmp_path / "bm25")
     build_postings_index(docs, path)
-    p_dir, d_dir = _postings_snapshot(path)
+    p_dir, d_dir, _ = _postings_snapshot(path)
     assert os.path.basename(d_dir) == "doclens.v0"
     want = [tuple(r) for r in query_postings_index(spark, path, "spark w3", k=5).collect()]
 

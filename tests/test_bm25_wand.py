@@ -225,34 +225,23 @@ def test_champions_flat_impact_warns_zipf_does_not(spark, tmp_path):
 def test_champions_termstats_ride_the_tier_version(spark, tmp_path):
     """Round-9 ADVICE: df must be co-published with the tier under ONE
     pointer flip — the stats table lives INSIDE the champions version
-    dir; an index laid out the legacy way (separate termstats live
-    table) still answers via the fallback."""
-    import shutil
-
+    dir, and champions scoring reads its df from there."""
     docs = _flat_docs(spark, 20)
     path = str(tmp_path / "bm25")
     build_postings_index(docs, path, champion_n=100)
     champ_dir, _ = _champ_snapshot(path)
     assert os.path.isdir(os.path.join(champ_dir, "_termstats"))
-    want = [
-        tuple(r)
-        for r in query_postings_index(
-            spark, path, "common", k=5, mode="champions"
-        ).collect()
-    ]
-    # degrade to the legacy layout: move the stats out to a top-level
-    # versioned termstats table and drop the in-version copy
-    legacy = os.path.join(path, "termstats.v0")
-    shutil.move(os.path.join(champ_dir, "_termstats"), legacy)
-    os.symlink(os.path.basename(legacy), os.path.join(path, "termstats"))
-    spark.catalog.refreshByPath(os.path.join(champ_dir, "_termstats"))
+    assert not os.path.exists(os.path.join(path, "termstats"))
+    # champion_n covers the term's whole df, so champions scores (idf
+    # from the in-version df) equal the exact path's
     got = [
         tuple(r)
         for r in query_postings_index(
             spark, path, "common", k=5, mode="champions"
         ).collect()
     ]
-    assert got == want
+    want = [tuple(r) for r in query_postings_index(spark, path, "common", k=5).collect()]
+    assert got == want and len(got) == 5
 
 
 def test_wand_string_doc_ids(spark, tmp_path):

@@ -219,28 +219,27 @@ def test_version_machine_invariants_under_random_op_sequences(tmp_path):
     run()
 
 
-def test_heal_migrates_legacy_flat_layout(tmp_path):
-    """A table written before versioning is a plain directory at the
-    live path; publish() cannot os.replace a symlink over it. heal()
-    under the writer lock migrates it to <live>.v0 + pointer so builds
-    over legacy indexes succeed (round-8 ADVICE)."""
+def test_heal_refuses_plain_directory_at_live_path(tmp_path):
+    """Every index table is a pointer to a version directory; a plain
+    directory at the live path (written by hand or by an external
+    tool) is refused before anything is written — publish() could not
+    replace it with a symlink, so a writer would otherwise write a
+    whole version only to fail at the flip."""
+    import pytest
+
     root = str(tmp_path)
     live = os.path.join(root, "bands")
     os.makedirs(live)
     with open(os.path.join(live, "data.parquet"), "w") as fh:
-        fh.write("legacy")
+        fh.write("flat")
     with writer_lock(root):
-        heal(live)
-        # migrated: live is now a pointer to .v0 holding the old data
-        assert os.path.islink(live) and _read_live(live) == "legacy"
-        assert current_version_dir(live).endswith(".v0")
-        # and a fresh build over it proceeds as version 1
-        target = _mk_version(live, "rebuilt")
-        assert target.endswith(".v1")
-        publish(live, target)
-    assert _read_live(live) == "rebuilt"
-    # legacy content retained as the superseded snapshot
-    assert os.path.exists(os.path.join(root, "bands.v0"))
+        before = sorted(os.listdir(root))
+        with pytest.raises(RuntimeError, match="plain directory"):
+            heal(live)
+        assert sorted(os.listdir(root)) == before
+    assert not os.path.islink(live)
+    assert os.listdir(live) == ["data.parquet"]
+    assert _read_live(live) == "flat"
 
 
 def test_writer_lock_rejects_foreign_host(tmp_path):
@@ -292,14 +291,14 @@ def test_version_meta_rides_the_pointer_flip(tmp_path):
     v0 = _mk_version(live, "v0")
     write_version_meta(v0, "_m.json", {"bands": 8})
     publish(live, v0)
-    vd, m = snapshot_meta(live, "_m.json", root)
+    vd, m = snapshot_meta(live, "_m.json")
     assert vd == os.path.realpath(v0) and m == {"bands": 8}
 
     # "rebuild": new data + new params, one flip
     v1 = _mk_version(live, "v1")
     write_version_meta(v1, "_m.json", {"bands": 16})
     publish(live, v1)
-    vd1, m1 = snapshot_meta(live, "_m.json", root)
+    vd1, m1 = snapshot_meta(live, "_m.json")
     assert vd1 == os.path.realpath(v1) and m1 == {"bands": 16}
     # the retained old snapshot still self-describes with OLD params
     with open(os.path.join(v0, "_m.json")) as fh:
@@ -308,41 +307,22 @@ def test_version_meta_rides_the_pointer_flip(tmp_path):
         assert json.load(fh) == {"bands": 8}
 
 
-def test_snapshot_meta_falls_back_to_legacy_root_sidecar(tmp_path):
-    """Indexes built before meta rode the version directories keep
-    reading through the root-level sidecar (they were never rebuilt,
-    so the root copy is current by construction)."""
-    import json
-
-    from lakehouse_dba_tools_spark.operators.indexio import snapshot_meta
-
+def test_heal_repoints_lone_version_without_live_path(tmp_path):
+    """A version directory that is the table's only copy, with no live
+    path pointing at it (a build that crashed before its first publish,
+    or a lost pointer). heal() must
+    re-point the symlink at it — a naive reclaim would classify it as
+    never-published debris and delete the table permanently."""
     root = str(tmp_path)
     live = os.path.join(root, "bands")
-    v0 = _mk_version(live, "v0")  # no in-version meta
-    publish(live, v0)
-    with open(os.path.join(root, "_m.json"), "w") as fh:
-        json.dump({"bands": 4}, fh)
-    vd, m = snapshot_meta(live, "_m.json", root)
-    assert vd == os.path.realpath(v0) and m == {"bands": 4}
-
-
-def test_heal_recovers_dangling_legacy_migration(tmp_path):
-    """The round-9 ADVICE crash window: a crash AFTER the legacy
-    migration's os.rename(live, <live>.v0) but BEFORE the pointer
-    publish leaves the table's only copy unpointered and the live path
-    absent. heal() must re-point the symlink at it — a naive reclaim
-    would classify it as never-published debris and delete the legacy
-    table permanently."""
-    root = str(tmp_path)
-    live = os.path.join(root, "bands")
-    # simulate the crash state directly: renamed dir, no live path
+    # simulate the crash state directly: a version dir, no live path
     os.makedirs(live + ".v0")
     with open(os.path.join(live + ".v0", "data.parquet"), "w") as fh:
-        fh.write("legacy-only-copy")
+        fh.write("only-copy")
     with writer_lock(root):
         heal(live)
     assert os.path.islink(live)
-    assert _read_live(live) == "legacy-only-copy"
+    assert _read_live(live) == "only-copy"
     assert current_version_dir(live).endswith(".v0")
 
 

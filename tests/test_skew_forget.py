@@ -284,8 +284,8 @@ def test_bm25_forget_equals_fresh_build_tiers_and_queries(spark, sf_dir, tmp_pat
     assert rep["postings"]["rows_removed"] > 0
     build_postings_index(kept_docs, b, champion_n=n_kept + 10, wand_buckets=8)
 
-    pa, da = _postings_snapshot(a)
-    pb, db = _postings_snapshot(b)
+    pa, da, _ = _postings_snapshot(a)
+    pb, db, _ = _postings_snapshot(b)
     assert _rowset(spark.read.parquet(pa)) == _rowset(spark.read.parquet(pb))
     assert _rowset(spark.read.parquet(da)) == _rowset(spark.read.parquet(db))
     ca, cma = _champ_snapshot(a)
@@ -391,6 +391,12 @@ def test_forget_from_indexes_audit_frame(spark, sf_dir, tmp_path):
     for r in rows.values():
         assert r["rows_before"] == r["rows_removed"] + r["rows_after"]
         assert r["rows_removed"] > 0
+    # one layout: every parameter sidecar rides inside a version
+    # directory, none at an index root
+    import os
+
+    for root in (lsh, bm, ivf):
+        assert not [f for f in os.listdir(root) if f.endswith(".json")]
 
 
 def test_forget_everything_leaves_readable_empty_indexes(spark, sf_dir, tmp_path):
@@ -432,7 +438,7 @@ def test_forget_everything_leaves_readable_empty_indexes(spark, sf_dir, tmp_path
 
     rep = forget_from_postings_index(spark, bm, docs.select("doc_id"))
     assert rep["postings"]["rows_after"] == 0
-    p_dir, d_dir = _postings_snapshot(bm)
+    p_dir, d_dir, _ = _postings_snapshot(bm)
     assert spark.read.parquet(p_dir).count() == 0
     assert spark.read.parquet(d_dir).count() == 0
 
@@ -697,7 +703,7 @@ def test_replayed_ingest_cannot_resurrect_forgotten_docs(spark, sf_dir, tmp_path
     append_to_postings_index(batch, bm)                     # original epoch
     forget_from_postings_index(spark, bm, forget)
     append_to_postings_index(batch, bm)                     # replayed epoch
-    p_dir, d_dir = _postings_snapshot(bm)
+    p_dir, d_dir, _ = _postings_snapshot(bm)
     for d in (p_dir, d_dir):
         got = (
             spark.read.parquet(d)
@@ -820,7 +826,7 @@ def test_builds_honor_ledger_and_reconsent_reopens(spark, sf_dir, tmp_path):
     build_ivf_index(emb, ivf, n_centroids=4)
     bands = spark.read.parquet(current_version_dir(f"{lsh}/bands"))
     assert bands.filter(F.col("doc_id").isin(list(fids))).count() == 0
-    p_dir, _ = _postings_snapshot(bm)
+    p_dir = _postings_snapshot(bm)[0]
     assert (
         spark.read.parquet(p_dir).filter(F.col("doc_id").isin(list(fids))).count()
         == 0

@@ -190,3 +190,24 @@ def test_ingest_dedup_sink_epoch_replay_idempotent(spark, tmp_path):
     sink(batch, 0)  # replay: append already landed, same epoch_id
     assert sorted((r.id_a, r.id_b) for r in found[0]) == first == [(10, 1)]
     assert list(found) == [0]  # one slot, replaced not extended
+
+
+def test_replay_in_batches_rejects_null_ids(spark):
+    """A null id has no batch: it must fail with a clear error before
+    any seeding or staging, not as an int() parse of the
+    __HIVE_DEFAULT_PARTITION__ staging directory."""
+    import pytest
+
+    from lakehouse_dba_tools_spark.streaming.replay import replay_in_batches
+
+    df = spark.createDataFrame(
+        [(0, "a"), (None, "b"), (15, "c")], "doc_id long, text string"
+    )
+    calls = []
+    with pytest.raises(ValueError, match="'doc_id' contains nulls"):
+        replay_in_batches(
+            spark, df, "doc_id", 10,
+            seed_fn=lambda d: calls.append("seed"),
+            sink=lambda d, e: calls.append(e),
+        )
+    assert calls == []

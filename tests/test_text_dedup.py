@@ -452,15 +452,12 @@ def test_lsh_index_lifecycle(spark, tmp_path):
     # a missing meta file fails loudly instead of silently finding
     # nothing (query/append take parameters FROM the stored meta, so
     # the API itself cannot diverge from what the index was built with).
-    # The authoritative copy rides INSIDE the published bands version
-    # (atomic params+data publish); the root copy is informational —
-    # deleting root alone must NOT break reads, deleting both must.
+    # The only copy rides INSIDE the published bands version (atomic
+    # params+data publish).
     import os as _os
 
     from lakehouse_dba_tools_spark.operators.indexio import current_version_dir
 
-    _os.remove(_os.path.join(path, "_lsh_meta.json"))
-    assert query_lsh_index(spark, batch2, path, threshold=0.5).count() >= 1
     _os.remove(
         _os.path.join(
             current_version_dir(_os.path.join(path, "bands")), "_lsh_meta.json"
@@ -739,58 +736,6 @@ def test_ingest_batch_supports_string_doc_ids(spark, tmp_path):
     got = ingest_batch(spark, batch, path, threshold=0.5)
     assert dict(got.dtypes)["id_a"] == "string"
     assert {(r.id_a, r.id_b) for r in got.collect()} == {("c3", "a1")}
-
-
-def test_lsh_index_migrates_legacy_flat_layout_end_to_end(spark, tmp_path):
-    """A pre-versioning index (plain directories at the live paths) is
-    migrated by the first locked writer: compaction heals each table to
-    <live>.v0 + pointer and publishes v1, and queries keep answering
-    identically before and after (round-8 ADVICE: publish over a
-    non-symlink live dir used to crash ENOTEMPTY)."""
-    import os
-    import shutil
-
-    from lakehouse_dba_tools_spark.dedup.index import (
-        build_lsh_index,
-        compact_lsh_index,
-        query_lsh_index,
-    )
-
-    corpus = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog again and again today"),
-            (3, "completely different text about spark query engines and shuffles"),
-        ],
-        "doc_id int, text string",
-    )
-    batch = spark.createDataFrame(
-        [(10, "the quick brown fox jumps over the lazy dog again and again tonight")],
-        "doc_id int, text string",
-    )
-    path = str(tmp_path / "idx")
-    build_lsh_index(corpus, path, num_perm=32, bands=8, seed=7)
-    # simulate the legacy flat layout: replace each live symlink with a
-    # real directory holding the same files
-    for sub in ("bands", "shash"):
-        live = os.path.join(path, sub)
-        resolved = os.path.realpath(live)
-        os.remove(live)
-        shutil.copytree(resolved, live, symlinks=False)
-        shutil.rmtree(resolved)
-    assert not os.path.islink(os.path.join(path, "bands"))
-
-    # the flat fallback is assumed-migration territory — it must be
-    # LOUD (round-10 ADVICE: a wrong flat table silently standing in
-    # for the named version would void the single-flip pairing)
-    import pytest as _pytest
-
-    with _pytest.warns(UserWarning, match="layout migration"):
-        want = {(r.id_a, r.id_b) for r in query_lsh_index(spark, batch, path, threshold=0.5).collect()}
-    assert want == {(10, 1)}
-    compact_lsh_index(spark, path)  # first locked writer migrates
-    assert os.path.islink(os.path.join(path, "bands"))
-    got = {(r.id_a, r.id_b) for r in query_lsh_index(spark, batch, path, threshold=0.5).collect()}
-    assert got == want
 
 
 def test_lsh_query_planned_before_rebuild_completes_on_its_snapshot(spark, tmp_path):

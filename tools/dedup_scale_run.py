@@ -1,8 +1,10 @@
 """Dedup-family scale evidence: the LLM-pipeline analog of
 tools/scale_run.py (the fixtures only ship documents up to sf0.1, so
 the 10x tier here is a deterministic synthetic corpus built from pure
-column expressions — same shape as the fixture corpus: ~2% planted
-near-dup neighbors, J ~= 0.9).
+column expressions: 2% of its docs are planted near-dup neighbors,
+J ~= 0.87. It is NOT the fixture corpus's shape: the sf0.1
+documents.parquet plants 5% — 250 of 5,000 docs are another doc with
+" dup" appended, J 0.89-0.99).
 
 Measures, at 5k (the sf0.1 bench corpus size) and 50k docs:
 - verified_near_dups end-to-end wall (MinHash sign -> band join ->

@@ -31,12 +31,13 @@ LOG_NAME = "commits.jsonl"
 def footer_row_count(table_path: str) -> int:
     """Row count from parquet footers — driver-side metadata read, no
     Spark job (the way Delta gets commit stats from its log for free;
-    rescanning the table per commit would double every merge's cost)."""
+    rescanning the table per commit would double every merge's cost).
+    Files inside ``col=value`` partition directories count too."""
     import glob as _glob
 
     import pyarrow.parquet as pq
 
-    files = _glob.glob(os.path.join(table_path, "*.parquet")) or (
+    files = _glob.glob(os.path.join(table_path, "**", "*.parquet"), recursive=True) or (
         [table_path] if os.path.isfile(table_path) else []
     )
     return sum(pq.read_metadata(f).num_rows for f in files)

@@ -7,21 +7,24 @@ Delta_withmetrics.py:61-69,89-96,153-204`). We rebuild that as:
 
 - ``records_to_df``: list-of-dicts → DataFrame with inferred (or
   declared) nested schema, optional bool normalization;
-- ``paged_source``: a generator-of-pages source that parses each page
-  into a DataFrame and returns ONE DataFrame via a single union fold —
-  avoiding the reference's N-page-deep union chain built inside the
-  loop (QH:225), which bloats the logical plan (SURVEY.md §3.1).
+- ``paged_source``: drains a generator of pages into one record list
+  and parses it with ONE ``records_to_df`` call — one schema inference
+  and one scan for the whole look-back, where the reference parses each
+  page and grows a union chain inside the loop (QH:225, SURVEY.md §3.1).
+  Page schemas therefore merge under Spark's JSON inference rules, the
+  same rules that apply within one page: a field that is a number in
+  one page and a string or object in another comes back as ``string``.
 
 The reference also drops the final page because it breaks before
-parsing when ``has_next_page`` is false (QH:187-188). We process the
-page first and then stop — fixed divergence, documented here.
+parsing when ``has_next_page`` is false (QH:187-188). We keep the
+page and then stop — fixed divergence, documented here.
 """
 
 from __future__ import annotations
 
 import json
-from collections.abc import Callable, Iterable, Iterator
-from functools import reduce
+from collections.abc import Iterable
+from itertools import islice
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -59,14 +62,14 @@ def records_to_df(
     if stringify_bools:
         records = [normalize_bools(r) for r in records]
     payload = [json.dumps(r) for r in records]
-    rdd = spark.sparkContext.parallelize(payload or [""], max(1, len(payload) // 5000 + 1))
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
     if not payload:
         if schema is None:
             raise ValueError("empty record set requires an explicit schema")
         return spark.createDataFrame([], schema)
+    rdd = spark.sparkContext.parallelize(payload, len(payload) // 5000 + 1)
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(schema)
     return reader.json(rdd)
 
 
@@ -76,29 +79,18 @@ def paged_source(
     schema: T.StructType | str | None = None,
     stringify_bools: bool = True,
     max_pages: int = 500,
-    flatten: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
-    """Drain a page iterator into one DataFrame (reference S7 rebuilt).
+    """Drain up to ``max_pages`` pages into one DataFrame (reference S7
+    rebuilt).
 
-    ``pages`` stands in for the REST pagination loop — any generator
+    ``pages`` stands in for the REST pagination loop — any iterable
     yielding lists of records (an HTTP client, a file tailer, a fixture).
-    Unlike the reference we union once over the collected page frames
-    (and by NAME, not position — SURVEY.md §7 risk 4), and we never drop
-    the final page.
+    Every record of every page, the final page included, goes into one
+    list that is parsed once, so the result is a single scan with no
+    union in its plan. With ``schema=None`` the columns come out in
+    inference order (alphabetical) and a field whose type differs
+    between pages widens as it would within one page. No records and no
+    schema raises ``ValueError`` (from ``records_to_df``).
     """
-    frames: list[DataFrame] = []
-    it: Iterator[list[dict[str, Any]]] = iter(pages)
-    for i, page in enumerate(it):
-        if i >= max_pages:
-            break
-        if not page:
-            continue
-        df = records_to_df(spark, page, schema=schema, stringify_bools=stringify_bools)
-        if flatten is not None:
-            df = flatten(df)
-        frames.append(df)
-    if not frames:
-        if schema is None:
-            raise ValueError("no pages and no schema")
-        return spark.createDataFrame([], schema)
-    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
+    records = [r for page in islice(pages, max_pages) for r in page]
+    return records_to_df(spark, records, schema=schema, stringify_bools=stringify_bools)

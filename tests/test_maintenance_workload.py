@@ -244,6 +244,27 @@ def test_commit_log_history_and_checkpoint(spark, tmp_path):
     assert hist2[1].version == 2  # checkpoint carries the collapsed head version
 
 
+def test_partitioned_commits_record_table_row_counts(spark, tmp_path):
+    """CREATE and MERGE on a partitioned table log the table's row count,
+    read from the parquet files inside its partition directories."""
+    from lakehouse_dba_tools_spark.maintenance.history import describe_history
+    from lakehouse_dba_tools_spark.operators.upsert import create_or_upsert_partitioned
+
+    path = str(tmp_path / "part_tbl")
+    df1 = spark.createDataFrame([(1, "a", "p1"), (2, "b", "p2")], "k int, v string, p string")
+    create_or_upsert_partitioned(spark, df1, path, ["k"], "p")
+    created = spark.read.parquet(path).count()
+    df2 = spark.createDataFrame([(2, "B", "p2"), (3, "c", "p3")], "k int, v string, p string")
+    create_or_upsert_partitioned(spark, df2, path, ["k"], "p")
+    merged = spark.read.parquet(path).count()
+
+    hist = describe_history(spark, path).collect()
+    assert [(r.operation, r.num_output_rows) for r in hist] == [
+        ("MERGE", merged), ("CREATE", created),
+    ]
+    assert (created, merged) == (2, 3)
+
+
 def _z_ref(ranks, bits):
     z = 0
     n = len(ranks)

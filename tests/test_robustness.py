@@ -37,6 +37,20 @@ def test_paged_source_heterogeneous_pages_union_by_name(spark):
     assert rows[0].extra is None and rows[1].extra == "late"
 
 
+def test_paged_source_infers_one_schema_across_pages(spark):
+    """All pages go through ONE inference, so a field whose type differs
+    between pages widens to string as it would within one page, instead
+    of failing at collect; and the plan is one scan, not a union."""
+    df = paged_source(spark, iter([[{"v": 1}], [{"v": "x"}]]), stringify_bools=False)
+    assert dict(df.dtypes) == {"v": "string"}
+    assert {r.v for r in df.collect()} == {"1", "x"}
+    assert "Union" not in df._jdf.queryExecution().optimizedPlan().toString()
+
+    df = paged_source(spark, iter([[{"v": 1}], [{"v": {"a": 1}}]]), stringify_bools=False)
+    assert dict(df.dtypes) == {"v": "string"}
+    assert df.count() == 2
+
+
 def test_empty_inputs(spark):
     from lakehouse_dba_tools_spark.dedup.minhash import with_minhash_signature, with_shingle_set
     from lakehouse_dba_tools_spark.operators.dedup import dedup_by_key
